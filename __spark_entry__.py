@@ -48,17 +48,40 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from ocr_image_to_text_spark import queries as q
 
     # Dict order matters: the driver certifies a budget-limited PREFIX of
-    # this registry (r1: 40, r2: 46, r3/r4: 50). r5 front block
-    # (tools/cert_ledger.py BUDGET=50), in order: (A) the 5 queries added
-    # or code-changed this round; (B) the 31 queries VERDICT r4 lists as
-    # judge-verified but never driver-certified (cheapest-first); (C) 14
-    # flagship re-certs whose driver certificates date from r1-r3 (the
-    # bench suite + oldest-cert docs queries). tests/test_cert_ledger.py
+    # this registry (r1: 40, r2: 46, r3-r5: 50; tools/cert_ledger.py
+    # BUDGET=50). Every entry holds a driver certificate as of r5
+    # (CORRECTNESS_r05.json). Front block, in order: (A) the 22 queries
+    # whose code changed since that certificate — every query that runs
+    # the boxes layout kernel or the fused dispatch UDF; (B) the rest of
+    # the r5 front block in its r5 order. tests/test_cert_ledger.py
     # enforces that drifted/uncertified queries sit inside this prefix.
     return {
-        # --- (A) r5 new / code-changed ---
-        "conversation_salted_join": q.conversation_salted_join,
+        # --- (A) code changed since the r5 certificate ---
         "extract_layout_analysis": q.extract_layout_analysis,
+        "extract_rollup": q.extract_rollup,
+        "extract_spans": q.extract_spans,
+        "conversation_stitch": q.conversation_stitch,
+        "chunks_modern": q.chunks_modern,
+        "chunk_cosine_topk": q.chunk_cosine_topk,
+        "conversation_preview_t4": q.conversation_preview_t4,
+        "extract_variant_agreement": q.extract_variant_agreement,
+        "extract_boxes_xycut": q.extract_boxes_xycut,
+        "conversation_quality_trend": q.conversation_quality_trend,
+        "chunk_l2_topk": q.chunk_l2_topk,
+        "extract_boxes_v1": q.extract_boxes_v1,
+        "extract_boxes_v3": q.extract_boxes_v3,
+        "extract_kind_metrics": q.extract_kind_metrics,
+        "conversation_stitch_v1": q.conversation_stitch_v1,
+        "conversation_dedup_seeded": q.conversation_dedup_seeded,
+        "extract_flat": q.extract_flat,
+        "boxes_table_flags": q.boxes_table_flags,
+        "extract_similarity_x16": q.extract_similarity_x16,
+        "boxes_avg_conf": q.boxes_avg_conf,
+        "extract_metrics_cube": q.extract_metrics_cube,
+        "extract_conv_quality": q.extract_conv_quality,
+        # --- (B) r5 front block (r5 new / code-changed, then VERDICT r4's
+        # judge-only list, then flagship re-certs) ---
+        "conversation_salted_join": q.conversation_salted_join,
         "dedup_simhash_pairs": q.dedup_simhash_pairs,
         "dedup_simhash_pairs_narrow": q.dedup_simhash_pairs_narrow,
         "dedup_clusters_star": q.dedup_clusters_star,
@@ -69,7 +92,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_bpe_encode": q.corpus_bpe_encode,
         "tpch_cheapest_supplier": q.tpch_cheapest_supplier,
         "dedup_apply_minhash": q.dedup_apply_minhash,
-        # --- (B) never in any CORRECTNESS_r*.json (VERDICT r4 list) ---
         "doc_length_histogram": q.doc_length_histogram,
         "corpus_length_quantiles": q.corpus_length_quantiles,
         "corpus_sample_stratified": q.corpus_sample_stratified,
@@ -87,6 +109,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_c4_page_filter": q.doc_c4_page_filter,
         "doc_c4_page_filter_seeded": q.doc_c4_page_filter_seeded,
         "corpus_decontaminate": q.corpus_decontaminate,
+        # ---- end of the 50-entry certified prefix ----
         "corpus_decontaminate_bloom": q.corpus_decontaminate_bloom,
         "corpus_pack_sequences": q.corpus_pack_sequences,
         "corpus_curation_pipeline": q.corpus_curation_pipeline,
@@ -100,16 +123,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "semdedup_prune": q.semdedup_prune,
         "dedup_dup_spans": q.dedup_dup_spans,
         "dedup_c4_spans": q.dedup_c4_spans,
-        "chunk_cosine_topk": q.chunk_cosine_topk,
-        # --- (C) flagship re-certs (driver certificates from r1-r3) ---
-        "extract_rollup": q.extract_rollup,
-        "extract_spans": q.extract_spans,
-        "conversation_stitch": q.conversation_stitch,
-        "chunks_modern": q.chunks_modern,
         "dedup_exact": q.dedup_exact,
         "dedup_minhash_lsh": q.dedup_minhash_lsh,
         "doc_simhash": q.doc_simhash,
-        # ---- end of the 50-entry certified prefix ----
         "doc_token_counts": q.doc_token_counts,
         "doc_fingerprints": q.doc_fingerprints,
         "doc_entities": q.doc_entities,
@@ -127,13 +143,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tpch_custdist": q.tpch_custdist,
         "tpch_large_orders": q.tpch_large_orders,
         "doc_quality_deciles": q.doc_quality_deciles,
-        "conversation_preview_t4": q.conversation_preview_t4,
         "conversation_latency_quantiles": q.conversation_latency_quantiles,
         "conversation_role_transitions": q.conversation_role_transitions,
         "conversation_tool_stats": q.conversation_tool_stats,
         "turn_link_density": q.turn_link_density,
         "corpus_source_stats": q.corpus_source_stats,
-        "extract_variant_agreement": q.extract_variant_agreement,
         "corpus_boilerplate_lines": q.corpus_boilerplate_lines,
         "doc_strip_boilerplate": q.doc_strip_boilerplate,
         "corpus_sample_weighted": q.corpus_sample_weighted,
@@ -150,7 +164,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_ivfpq_adc_topk": q.ann_ivfpq_adc_topk,
         "ann_ivf_lloyd_topk": q.ann_ivf_lloyd_topk,
         "ann_ivf_recall": q.ann_ivf_recall,
-        "extract_boxes_xycut": q.extract_boxes_xycut,
         "doc_lang_agreement": q.doc_lang_agreement,
         "corpus_decontaminate_anti": q.corpus_decontaminate_anti,
         "extract_box_overlaps": q.extract_box_overlaps,
@@ -159,7 +172,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tpch_nation_volume": q.tpch_nation_volume,
         "tpch_market_share": q.tpch_market_share,
         "events_retention": q.events_retention,
-        "conversation_quality_trend": q.conversation_quality_trend,
         "dedup_fingerprint_pairs": q.dedup_fingerprint_pairs,
         "doc_char_entropy": q.doc_char_entropy,
         "events_trailing_value": q.events_trailing_value,
@@ -169,16 +181,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- r3-certified remainder ---
         "media_image_features": q.media_image_features,
         "media_audio_features": q.media_audio_features,
-        "chunk_l2_topk": q.chunk_l2_topk,
         # --- extraction pipeline (driver-green r01-r03) ---
-        "extract_boxes_v1": q.extract_boxes_v1,
-        "extract_boxes_v3": q.extract_boxes_v3,
-        "extract_kind_metrics": q.extract_kind_metrics,
-        "conversation_stitch_v1": q.conversation_stitch_v1,
-        "conversation_dedup_seeded": q.conversation_dedup_seeded,
-        "extract_flat": q.extract_flat,
-        "boxes_table_flags": q.boxes_table_flags,
-        "extract_similarity_x16": q.extract_similarity_x16,
         # --- documents analytics (SURVEY §2.8) ---
         "doc_entities_seeded": q.doc_entities_seeded,
         "doc_redact": q.doc_redact,
@@ -197,10 +200,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "qa_fallback_x15": q.qa_fallback_x15,
         "qa_answer_x14": q.qa_answer_x14,
         "rag_fallback_pipeline": q.rag_fallback_pipeline,
-        "boxes_avg_conf": q.boxes_avg_conf,
         "extract_angle_mode": q.extract_angle_mode,
-        "extract_metrics_cube": q.extract_metrics_cube,
-        "extract_conv_quality": q.extract_conv_quality,
         "conversation_turn_latency": q.conversation_turn_latency,
         "doc_keyword_topk_x5": q.doc_keyword_topk_x5,
         "doc_txt_envelope": q.doc_txt_envelope,

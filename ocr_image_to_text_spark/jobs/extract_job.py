@@ -71,14 +71,17 @@ def part_id_col(n_buckets: int):
     return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
 
 
-def _done_parts(spark: SparkSession, manifest_path: str) -> set[int]:
+def _done_rows(spark: SparkSession, manifest_path: str) -> list:
+    """The committed ``done`` manifest rows (part_id, lineage, n_turns) —
+    one manifest read serves the skip set, the lineage check and the
+    prior turn count."""
     if not os.path.exists(manifest_path):
-        return set()
-    m = spark.read.parquet(manifest_path)
+        return []
     # a part is done once any committed manifest row says so (rows are
     # only ever appended after a successful data write)
-    return {r.part_id for r in m.filter(F.col("status") == "done")
-            .select("part_id").distinct().collect()}
+    return (spark.read.parquet(manifest_path)
+            .filter(F.col("status") == "done")
+            .select("part_id", "lineage", "n_turns").collect())
 
 
 def run_extract_job(
@@ -107,7 +110,8 @@ def run_extract_job(
         salt_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     df = spark.read.parquet(input_path)
-    done = _done_parts(spark, manifest_dir)
+    done_rows = _done_rows(spark, manifest_dir)
+    done = {r.part_id for r in done_rows}
     todo = [p for p in range(n_buckets) if p not in done]
     if done:
         print(f"extract_job: resuming run={run_id}: "
@@ -115,11 +119,8 @@ def run_extract_job(
         # Refuse to resume under settings that change row semantics or the
         # stage/rollup schema: committed partitions would silently diverge
         # from the new waves (schema inference reads one arbitrary footer).
-        prev = (spark.read.parquet(manifest_dir)
-                .filter(F.col("status") == "done")
-                .select("lineage").limit(1).collect())
-        if prev and prev[0].lineage:
-            pl = json.loads(prev[0].lineage)
+        if done_rows[0].lineage:
+            pl = json.loads(done_rows[0].lineage)
             for key, val in (("variant", variant), ("extras", extras),
                              ("n_buckets", n_buckets)):
                 if key in pl and pl[key] != val:
@@ -175,12 +176,11 @@ def run_extract_job(
         (ext.repartition("part_id")
          .sortWithinPartitions("conv_id", "turn_idx")
          .write.mode("overwrite").partitionBy("part_id").parquet(rollup_dir))
-        t_stage = time.perf_counter() - t0
+        t_stage = time.perf_counter() - t0  # the stage IS the rollup write
         # Read back ONLY this wave's partitions (the table accumulates
         # across waves; partition pruning keeps derives wave-local).
         staged = (spark.read.parquet(rollup_dir)
                   .filter(F.col("part_id").isin([int(p) for p in wave])))
-        t_roll = time.perf_counter() - t0 - t_stage  # rollup IS the stage
         starts, ends, texts = span_cols(F.col("extracted_text"))
         with_spans = staged.select(
             "conv_id", "turn_idx", "part_id",
@@ -192,7 +192,7 @@ def run_extract_job(
         # the exploded span TEXT — the job's largest table — was not).
         (spans_table(with_spans).withColumn("part_id", part_id_col(n_buckets))
          .write.mode("overwrite").partitionBy("part_id").parquet(spans_dir))
-        t_spans = time.perf_counter() - t0 - t_stage - t_roll
+        t_spans = time.perf_counter() - t0 - t_stage
         t1 = time.perf_counter()
         stats = {r.part_id: r for r in staged.groupBy("part_id").agg(
             F.count("*").alias("n_turns"),
@@ -203,8 +203,7 @@ def run_extract_job(
         ).collect()}
         t_stats = time.perf_counter() - t1
         print(f"extract_job: wave {wave[0]}..{wave[-1]} stage={t_stage:.1f}s "
-              f"rollup={t_roll:.1f}s spans={t_spans:.1f}s stats={t_stats:.1f}s",
-              flush=True)
+              f"spans={t_spans:.1f}s stats={t_stats:.1f}s", flush=True)
         wall_ms = int((time.perf_counter() - t0) * 1000)
         run_turn_counts.append(sum(int(s.n_turns) for s in stats.values()))
         rows = []
@@ -226,15 +225,9 @@ def run_extract_job(
             raise RuntimeError(
                 f"extract_job: injected failure after {n_done_waves} waves")
 
-    # n_turns from the in-memory per-wave stats (this run) plus one manifest
-    # read only when resuming (prior runs' turns live only in the manifest)
-    n_this_run = sum(t for t in run_turn_counts)
-    if done:
-        m = spark.read.parquet(manifest_dir)
-        n_total = int(m.filter(F.col("status") == "done")
-                      .agg(F.sum("n_turns")).collect()[0][0] or 0)
-    else:
-        n_total = n_this_run
+    # n_turns = this run's per-wave stats plus the prior runs' done rows
+    n_total = (sum(run_turn_counts)
+               + sum(int(r.n_turns or 0) for r in done_rows))
     summary = {
         "run_id": run_id,
         "n_buckets": n_buckets,

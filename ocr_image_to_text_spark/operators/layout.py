@@ -1,8 +1,9 @@
-"""Reading-order reconstruction over token boxes — numpy implementation.
+"""Reading-order reconstruction over token boxes.
 
-Independent (vectorized) re-implementation of the reference's line
-clustering, verified byte-for-byte against
-:mod:`ocr_image_to_text_spark.pyref` by tests/test_layout_equiv.py.
+Engine restatement of the reference's line clustering, verified
+byte-for-byte against :mod:`ocr_image_to_text_spark.pyref` by
+tests/test_layout_equiv.py. One listwise path per variant, whatever the
+turn size.
 
 Variants (SURVEY.md §2.4 A2):
   v1 — tol 20px, per-token anchor, top-edge y key, within-line key (x0, top_y)
@@ -12,9 +13,10 @@ Variants (SURVEY.md §2.4 A2):
   v3 — tol 10px, LINE-START anchor, (y0, x0) sort, no within-line re-sort
        (src/core/ocr_engine.py:72-100)
 
-v1/v2 are pure gaps-and-islands (sortable + cumulative break-sum →
-fully vectorized with argsort/diff/cumsum). v3's anchor depends on the
-previous break decision → inherently sequential scan per turn.
+v1/v2 are gaps-and-islands: one stable sort, a line break wherever
+adjacent keys differ by more than the tolerance, then a within-line sort.
+v3's anchor depends on the previous break decision, so it is a
+sequential scan per turn.
 """
 
 from __future__ import annotations
@@ -25,7 +27,7 @@ import math
 import numpy as np
 
 
-def _assemble(texts: list, order: np.ndarray, line_id: np.ndarray) -> str:
+def _assemble(texts: list, order: list, line_id: list) -> str:
     """Join tokens (already in final order) into ' '-joined lines, '\n'-joined."""
     out = []
     cur: list[str] = []
@@ -41,46 +43,25 @@ def _assemble(texts: list, order: np.ndarray, line_id: np.ndarray) -> str:
     return "\n".join(out)
 
 
-# Below this size the per-call numpy overhead (array construction +
-# many tiny kernel launches) costs ~3.6x the work itself (measured at the
-# bench tier's median 15 tokens/turn); the listwise path is the same
-# gaps-and-islands structure without ndarray round-trips. Large skewed
-# turns (the north_rule case) keep the vectorized path.
-SMALL_N = 64
-
-
 def layout_v1(polys, texts: list) -> str:
     """polys: (n, 4, 2) float64 ndarray OR nested lists."""
     n = len(texts)
     if n == 0:
         return ""
-    if n < SMALL_N:
-        y0 = [p[0][1] for p in polys]
-        order = sorted(range(n), key=lambda i: y0[i])
-        top_y = [min(pt[1] for pt in polys[i]) for i in order]
-        x0 = [polys[i][0][0] for i in order]
-        line_id = [0] * n
-        lid = 0
-        for j in range(1, n):
-            if abs(top_y[j] - top_y[j - 1]) > 20:
-                lid += 1
-            line_id[j] = lid
-        final = sorted(range(n),
-                       key=lambda j: (line_id[j], x0[j], top_y[j], j))
-        return _assemble(texts, [order[j] for j in final],
-                         [line_id[j] for j in final])
-    polys = np.asarray(polys, dtype=np.float64)
-    y0 = polys[:, 0, 1]
-    order = np.argsort(y0, kind="stable")
-    top_y = polys[:, :, 1].min(axis=1)[order]
-    x0 = polys[order, 0, 0]
-    breaks = np.zeros(n, dtype=np.int64)
-    breaks[1:] = (np.abs(np.diff(top_y)) > 20).astype(np.int64)
-    line_id = np.cumsum(breaks)
+    y0 = [p[0][1] for p in polys]
+    order = sorted(range(n), key=lambda i: y0[i])
+    top_y = [min(pt[1] for pt in polys[i]) for i in order]
+    x0 = [polys[i][0][0] for i in order]
+    line_id = [0] * n
+    lid = 0
+    for j in range(1, n):
+        if abs(top_y[j] - top_y[j - 1]) > 20:
+            lid += 1
+        line_id[j] = lid
     # within-line stable sort by (x0, top_y): seq index is the final tiebreak
-    seq = np.arange(n)
-    final = np.lexsort((seq, top_y, x0, line_id))
-    return _assemble(texts, order[final], line_id[final])
+    final = sorted(range(n), key=lambda j: (line_id[j], x0[j], top_y[j], j))
+    return _assemble(texts, [order[j] for j in final],
+                     [line_id[j] for j in final])
 
 
 def layout_v2(polys, texts: list, img_h: float, geometry: str = "easy") -> str:
@@ -88,64 +69,32 @@ def layout_v2(polys, texts: list, img_h: float, geometry: str = "easy") -> str:
     if n == 0:
         return ""
     tol = max(10, img_h * 0.01)
-    if n < SMALL_N:
-        if geometry == "paddle":
-            cy = [(p[0][1] + p[3][1]) / 2 for p in polys]
-        else:
-            cy = [(p[0][1] + p[2][1]) / 2 for p in polys]
-        order = sorted(range(n), key=lambda i: cy[i])
-        cy_s = [cy[i] for i in order]
-        x0 = [polys[i][0][0] for i in order]
-        line_id = [0] * n
-        lid = 0
-        for j in range(1, n):
-            if abs(cy_s[j] - cy_s[j - 1]) > tol:
-                lid += 1
-            line_id[j] = lid
-        final = sorted(range(n), key=lambda j: (line_id[j], x0[j], j))
-        return _assemble(texts, [order[j] for j in final],
-                         [line_id[j] for j in final])
-    polys = np.asarray(polys, dtype=np.float64)
     if geometry == "paddle":
-        cy = (polys[:, 0, 1] + polys[:, 3, 1]) / 2
+        cy = [(p[0][1] + p[3][1]) / 2 for p in polys]
     else:
-        cy = (polys[:, 0, 1] + polys[:, 2, 1]) / 2
-    order = np.argsort(cy, kind="stable")
-    cy_s = cy[order]
-    x0 = polys[order, 0, 0]
-    breaks = np.zeros(n, dtype=np.int64)
-    breaks[1:] = (np.abs(np.diff(cy_s)) > tol).astype(np.int64)
-    line_id = np.cumsum(breaks)
-    seq = np.arange(n)
-    final = np.lexsort((seq, x0, line_id))
-    return _assemble(texts, order[final], line_id[final])
+        cy = [(p[0][1] + p[2][1]) / 2 for p in polys]
+    order = sorted(range(n), key=lambda i: cy[i])
+    cy_s = [cy[i] for i in order]
+    x0 = [polys[i][0][0] for i in order]
+    line_id = [0] * n
+    lid = 0
+    for j in range(1, n):
+        if abs(cy_s[j] - cy_s[j - 1]) > tol:
+            lid += 1
+        line_id[j] = lid
+    final = sorted(range(n), key=lambda j: (line_id[j], x0[j], j))
+    return _assemble(texts, [order[j] for j in final],
+                     [line_id[j] for j in final])
 
 
 def layout_v3(polys, texts: list) -> str:
     n = len(texts)
     if n == 0:
         return ""
-    if n < SMALL_N:
-        order = sorted(range(n),
-                       key=lambda i: (polys[i][0][1], polys[i][0][0], i))
-        ys = [polys[i][0][1] for i in order]
-        line_id = [0] * n
-        anchor = ys[0]
-        lid = 0
-        for i in range(1, n):
-            if abs(ys[i] - anchor) > 10:
-                lid += 1
-                anchor = ys[i]
-            line_id[i] = lid
-        return _assemble(texts, order, line_id)
-    polys = np.asarray(polys, dtype=np.float64)
-    y0 = polys[:, 0, 1]
-    x0 = polys[:, 0, 0]
-    seq = np.arange(n)
-    order = np.lexsort((seq, x0, y0))
-    ys = y0[order]
+    order = sorted(range(n), key=lambda i: (polys[i][0][1], polys[i][0][0], i))
+    ys = [polys[i][0][1] for i in order]
     # sequential line-anchor scan (anchor = y of the line-opening token)
-    line_id = np.zeros(n, dtype=np.int64)
+    line_id = [0] * n
     anchor = ys[0]
     lid = 0
     for i in range(1, n):
@@ -214,30 +163,18 @@ def table_flag_of(all_polys) -> bool:
     """A13 — src/ocr_module.py:516-540 even-spacing heuristic.
 
     Computed over ALL detections (pre conf-filter), easy-geometry y centers
-    (:527); population std (np.std default, :536). Small turns use the
-    sequential-sum listwise path (the same fold order as the oracle —
-    safer at the std<mean/2 boundary than numpy's pairwise summation);
-    large turns vectorize.
+    (:527); population std (np.std default, :536), both computed as
+    sequential sums — the oracle's fold order, which decides the
+    std < mean/2 boundary bit for bit (numpy's pairwise summation does not).
     """
     n = len(all_polys)
     if n <= 10:
         return False
-    if n < SMALL_N:
-        cy = sorted((p[0][1] + p[2][1]) / 2 for p in all_polys)
-        diffs = [cy[i + 1] - cy[i] for i in range(n - 1)]
-        if len(diffs) <= 5:
-            return False
-        mean = sum(diffs) / len(diffs)
-        var = sum((d - mean) ** 2 for d in diffs) / len(diffs)
-        std = var ** 0.5
-        return bool(std < mean * 0.5 and std > 0)
-    all_polys = np.asarray(all_polys, dtype=np.float64)
-    cy = np.sort((all_polys[:, 0, 1] + all_polys[:, 2, 1]) / 2)
-    diffs = np.diff(cy)
-    if diffs.size <= 5:
-        return False
-    mean = diffs.mean()
-    std = diffs.std()
+    cy = sorted((p[0][1] + p[2][1]) / 2 for p in all_polys)
+    diffs = [cy[i + 1] - cy[i] for i in range(n - 1)]
+    mean = sum(diffs) / len(diffs)
+    var = sum((d - mean) ** 2 for d in diffs) / len(diffs)
+    std = var ** 0.5
     return bool(std < mean * 0.5 and std > 0)
 
 
@@ -254,24 +191,15 @@ def _column_count(polys) -> int:
     n = len(polys)
     if n == 0:
         return 0
-    if n < SMALL_N:
-        spans = sorted((min(pt[0] for pt in p), max(pt[0] for pt in p))
-                       for p in polys)
-        cols = 1
-        run_hi = spans[0][1]
-        for lo, hi in spans[1:]:
-            if lo - run_hi > XY_GAP_X:
-                cols += 1
-            run_hi = max(run_hi, hi)
-        return cols
-    P = np.asarray(polys, dtype=np.float64)
-    lo = P[:, :, 0].min(axis=1)
-    hi = P[:, :, 0].max(axis=1)
-    order = np.argsort(lo, kind="stable")
-    lo_s, hi_s = lo[order], hi[order]
-    # running max of high edges up to (excluding) each box
-    run_hi = np.maximum.accumulate(hi_s)[:-1]
-    return 1 + int(np.count_nonzero(lo_s[1:] - run_hi > XY_GAP_X))
+    spans = sorted((min(pt[0] for pt in p), max(pt[0] for pt in p))
+                   for p in polys)
+    cols = 1
+    run_hi = spans[0][1]
+    for lo, hi in spans[1:]:
+        if lo - run_hi > XY_GAP_X:
+            cols += 1
+        run_hi = max(run_hi, hi)
+    return cols
 
 
 def _line_structure_counts(lines: list[str]) -> tuple[int, int, int]:
@@ -336,8 +264,6 @@ def extract_boxes_json(payload: str, variant: str = "v2", geometry: str = "easy"
     n_total = len(boxes)
     kept = [b for b in boxes if b[2] > conf_threshold]
     n_kept = len(kept)
-    # raw nested lists go straight to the layout/table operators — they
-    # convert to ndarray only on the large-turn vectorized path
     tflag = table_flag_of([b[0] for b in boxes]) if n_total else False
     flat = " ".join(b[1] for b in kept)
     if n_kept:

@@ -1,4 +1,4 @@
-"""Property tests: the numpy layout engine is byte-equal to the oracle,
+"""Property tests: the layout engine is byte-equal to the oracle,
 and clustering is invariant under input permutation (the reference sorts
 first, so detection order must not matter except for exact-tie stability).
 """
@@ -90,21 +90,37 @@ def test_cleaning_non_idempotence_documented():
     assert pyref.preprocess_text("a 中 b") == "a  b"
 
 
-@pytest.mark.parametrize("n", [63, 64, 65, 300])
+def _even_spacing_boundary_boxes() -> list:
+    """65 zero-height boxes whose y gaps alternate 4.3 / 12.9: the
+    table-flag statistic sits on its std < mean/2 boundary, where numpy's
+    pairwise summation and the oracle's sequential fold disagree."""
+    boxes = []
+    y = 100.5
+    for i in range(65):
+        boxes.append([[[0, y], [10, y], [10, y], [0, y]], f"w{i}", 0.9])
+        y += (1.0 if i % 2 == 0 else 3.0) * 4.3
+    return boxes
+
+
+@pytest.mark.parametrize("n", [63, 64, 65, 300, "even_spacing"])
 @pytest.mark.parametrize("variant", ["v1", "v2", "v3"])
 def test_small_and_large_paths_agree_with_oracle(n, variant):
-    """The listwise small-turn fast path and the vectorized large-turn
-    path (threshold layout.SMALL_N) must both equal the oracle."""
-    rng = random.Random(1000 + n)
-    boxes = []
-    for i in range(n):
-        x = rng.uniform(0, 800)
-        y = rng.uniform(0, 600)
-        w = rng.uniform(5, 40)
-        h = rng.uniform(5, 14)
-        conf = rng.uniform(0.0, 1.0)
-        boxes.append([[[x, y], [x + w, y], [x + w, y + h], [x, y + h]],
-                      f"w{i}", conf])
+    """Small and large turns (the same single listwise path) equal the
+    oracle, table flag included — the even-spacing case pins the flag's
+    summation order."""
+    if n == "even_spacing":
+        boxes = _even_spacing_boundary_boxes()
+    else:
+        rng = random.Random(1000 + n)
+        boxes = []
+        for i in range(n):
+            x = rng.uniform(0, 800)
+            y = rng.uniform(0, 600)
+            w = rng.uniform(5, 40)
+            h = rng.uniform(5, 14)
+            conf = rng.uniform(0.0, 1.0)
+            boxes.append([[[x, y], [x + w, y], [x + w, y + h], [x, y + h]],
+                          f"w{i}", conf])
     payload = json.dumps({"h": 600, "w": 800, "boxes": boxes})
     obj = json.loads(payload)
     kept = pyref.conf_filter(obj["boxes"])
@@ -151,8 +167,7 @@ def test_layout_analysis_random_matches_twin():
 
 @pytest.mark.parametrize("n", [63, 64, 65, 300])
 def test_layout_analysis_small_and_large_paths_agree(n):
-    """The listwise and vectorized _column_count paths (SMALL_N seam)
-    both equal the naive twin."""
+    """_column_count on small and large turns equals the naive twin."""
     from ocr_image_to_text_spark.operators.layout import layout_analysis_json
 
     rng = random.Random(4240 + n)

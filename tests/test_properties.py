@@ -7,7 +7,7 @@ invariants that the two-implementation equality checks rely on:
   * layout output is invariant under permutation of the detection array
     (the reference sorts before clustering, so input order must not
     matter) — v1/v2 with distinct sort keys;
-  * the numpy layout equals the pyref sequential scan on random inputs
+  * the layout engine equals the pyref sequential scan on random inputs
     (not just the committed fixtures);
   * spans reconstruct extracted_text exactly (offsets are a partition).
 """
